@@ -645,7 +645,7 @@ def main(argv: list[str] | None = None) -> int:
                         "filename matching; its --exclude-filenames "
                         "corresponds to omitting this flag)")
     s.add_argument("--no-prune", action="store_true",
-                   help="disable block-max WAND pruning")
+                   help="force the full groupBy path")
     s.add_argument("--session", default=None,
                    help="session id: drop results already returned in this "
                         "session and record the new ones")

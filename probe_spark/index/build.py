@@ -45,7 +45,7 @@ FUSED SINGLE-PASS PIPELINE (the scale path)
      directly with pyarrow, concatenates + sorts each (kind, term)'s
      chunks, emits final segments hard-capped at max_postings_per_segment
      with block-max metadata (block_last_doc/block_min_dl + per-block
-     byte offsets for WAND), side-written into postings/kind=/bucket=/
+     byte offsets for block-range decode), side-written into postings/kind=/bucket=/
      dirs.  The packed postings move exactly once, file -> file; Spark
      carries only the plan in and per-segment metadata out (which also
      yields the manifest without re-reading the index).
@@ -120,8 +120,8 @@ POSTINGS_SCHEMA = StructType(
         StructField("dl_bin", BinaryType(), False),
         StructField("block_last_doc", ArrayType(LongType(), False), False),
         StructField("block_min_dl", ArrayType(IntegerType(), False), False),
-        # byte start offsets per block into docs_bin / dl_bin (block-max
-        # WAND decodes only surviving blocks)
+        # byte start offsets per block into docs_bin / dl_bin (the
+        # doc-range path decodes only the blocks overlapping its range)
         StructField("block_doc_off", ArrayType(LongType(), False), False),
         StructField("block_dl_off", ArrayType(LongType(), False), False),
         StructField("bucket", IntegerType(), False),

@@ -416,8 +416,8 @@ def merge_many(
     no shuffle (the same invariant splice_chunks exploits, codec.py).
     Segment addresses (term, salt, seg_seq) may collide between inputs;
     every query path already disambiguates by min_doc (delta builds
-    created the same situation — see wand.py BlockMeta note), and doc
-    ranges are disjoint by construction.
+    created the same situation: their seg_seq restarts at 0 per batch),
+    and doc ranges are disjoint by construction.
 
     The merged index is rank- and score-IDENTICAL to a fresh build over
     the concatenated corpus when the source order is the (conv_id,

@@ -38,17 +38,29 @@ from probe_spark.functions import tokenizer as tok
 from probe_spark.index.xxhash import spark_bucket
 from probe_spark.query import ast
 from probe_spark.query.parser import ParseError, parse_query
-from probe_spark.search.engine import (
-    B,
-    K1,
-    MAX_QUERY_TERMS,
-    _wand_eligible,
-    special_plan,
-)
+from probe_spark.search.engine import MAX_QUERY_TERMS, special_plan
+from probe_spark.search.ranged import tf_norm
 
 RESULT_COLUMNS = [
     "doc_id", "score", "conv_id", "turn_idx", "role", "tool", "ts", "text",
 ]
+
+
+def _pure_disjunction(expr: ast.Expr) -> bool:
+    """True iff the query is a pure disjunction of single-keyword optional
+    terms (no AND, required, excluded, exact or multi-keyword term): its
+    score is a plain sum of per-term contributions and its candidate set
+    is the union of the terms' postings — the dense path's eligibility."""
+    if isinstance(expr, ast.Term):
+        return (
+            not expr.required
+            and not expr.excluded
+            and not expr.exact
+            and len(expr.keywords) == 1
+        )
+    if isinstance(expr, ast.Or):
+        return _pure_disjunction(expr.left) and _pure_disjunction(expr.right)
+    return False
 
 
 def _narrowable(e: ast.Expr) -> bool:
@@ -342,15 +354,14 @@ class LocalSearcher:
         float64 array over the doc-id space, each term's postings
         scatter-add idf*tf_norm — no candidate union, no presence masks,
         no per-term where() allocations.  Bit-identical to the generic
-        path: the parser folds OR chains left-associative and
-        ast.walk_terms yields terms in-order, so accumulating term
-        contributions in walk order reproduces the recursion's exact
-        float addition sequence (((s1+s2)+s3)+...), and 0.0+x == x.
-        Eligibility mirrors engine._wand_eligible (single-keyword
-        optional terms only) plus no tombstones/specials; returns None
-        when doc ids are too sparse for a dense array (fallback)."""
-        from probe_spark.query import ast as _ast
-
+        path because the additions follow the AST exactly as its
+        recursion does (Or = left + right): the left spine accumulates
+        in place, and a right child that is itself an Or sums into a
+        fresh array first, so ``a OR (b OR c)`` adds a + (b + c), not
+        (a + b) + c; 0.0 + x == x covers docs a term misses.
+        Eligibility is _pure_disjunction plus no tombstones/specials;
+        returns None when doc ids are too sparse for a dense array
+        (fallback)."""
         if len(per_term) < 2:
             # single term: the posting list IS the candidate set and the
             # generic path's identity shortcut beats a doc-space-sized
@@ -371,18 +382,27 @@ class LocalSearcher:
         }
         if not idfs:
             return []
-        scores = np.zeros(size)
-        for t in (tm.keywords[0] for tm in _ast.walk_terms(expr)):
+
+        def add(acc: np.ndarray, e: ast.Expr) -> None:
+            # acc (all zeros on entry) becomes e's score, summed in the
+            # generic recursion's order
+            if isinstance(e, ast.Or):
+                add(acc, e.left)
+                if isinstance(e.right, ast.Or):
+                    right = np.zeros(size)
+                    add(right, e.right)
+                    acc += right
+                else:
+                    add(acc, e.right)
+                return
+            t = e.keywords[0]
             idf = idfs.get(t, 0.0)
-            if not idf:
-                continue
-            ids, dls = per_term[t]
-            tfn = (K1 + 1.0) / (
-                1.0
-                + K1
-                * ((1.0 - B) + B * (dls.astype(np.float64) / self.avgdl))
-            )
-            scores[ids] += idf * tfn
+            if idf:
+                ids, dls = per_term[t]
+                acc[ids] += idf * tf_norm(dls, self.avgdl)
+
+        scores = np.zeros(size)
+        add(scores, expr)
         n = scores.size
         kth = np.partition(scores, n - k)[n - k] if n > k else 0.0
         sel = np.flatnonzero(
@@ -516,6 +536,8 @@ class LocalSearcher:
         self, query: str, k: int | None = 10, exact: bool = False,
         with_metadata: bool = True,
     ) -> list[dict]:
+        if k == 0:
+            return []
         try:
             expr, _special = parse_query(query, exact=exact)
         except ParseError:
@@ -552,7 +574,7 @@ class LocalSearcher:
             k is not None
             and self._tomb is None
             and not special_kws
-            and _wand_eligible(expr)
+            and _pure_disjunction(expr)
         ):
             # pure disjunction of single-keyword optional terms: dense
             # scatter-add scoring, no candidate union (bit-identical —
@@ -836,10 +858,9 @@ class LocalSearcher:
             else:
                 present[kw] = lookup_present[match]
 
-        tf_norm = (K1 + 1.0) / (
-            1.0 + K1 * ((1.0 - B) + B * (dl.astype(np.float64) / avgdl))
+        score, ok = self._score_eval(
+            expr, present, idfs, tf_norm(dl, avgdl), n
         )
-        score, ok = self._score_eval(expr, present, idfs, tf_norm, n)
         keep = ok & ~np.isnan(score)
         if self._tomb is not None and n:
             # deleted docs never surface (covers the repair-widened and
@@ -871,10 +892,9 @@ class LocalSearcher:
                     present[kw] = np.zeros(n, dtype=bool)
                 else:
                     present[kw] = lookup_present[match]
-            tf_norm = (K1 + 1.0) / (
-                1.0 + K1 * ((1.0 - B) + B * (dl.astype(np.float64) / avgdl))
+            score, ok = self._score_eval(
+                expr, present, idfs, tf_norm(dl, avgdl), n
             )
-            score, ok = self._score_eval(expr, present, idfs, tf_norm, n)
             keep = ok & ~np.isnan(score)
             if self._tomb is not None and n:
                 pos = np.searchsorted(self._tomb, cand_ids)

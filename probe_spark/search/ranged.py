@@ -49,6 +49,8 @@ import pyarrow as pa
 
 from probe_spark.query import ast
 
+# BM25 constants (ranking.rs:361-362) — the one numpy-side definition;
+# engine and local import them from here
 K1 = 1.5
 B = 0.5
 
@@ -56,6 +58,18 @@ B = 0.5
 # working set stays cache-friendly and every core gets work even for
 # mid-sized queries, large enough that per-task overhead stays noise
 TARGET_POSTINGS_PER_RANGE = 1_000_000
+
+
+def tf_norm(dl, avgdl: float):
+    """BM25 tf-normalization with tf==1 over a numpy dl array:
+    (k1+1)/(1 + k1*(1 - b + b*dl/avgdl)) — ranking.rs:186-208.  Same
+    float64 operation order as engine._tf_norm_col, so every numpy path
+    scores bit-identically to the Column-compiled full path."""
+    import numpy as np
+
+    return (K1 + 1.0) / (
+        1.0 + K1 * ((1.0 - B) + B * (dl.astype(np.float64) / avgdl))
+    )
 
 
 def _score_eval_numpy(
@@ -265,12 +279,8 @@ def make_range_eval(
                     pos = np.searchsorted(tid, uids)
                     pos[pos == len(tid)] = len(tid) - 1
                     present[kw] = tid[pos] == uids
-            # identical float shape to engine._tf_norm_col
-            tf_norm = (K1 + 1.0) / (
-                1.0 + K1 * ((1.0 - B) + B * (udls.astype(np.float64) / avgdl))
-            )
             score, isnull, ok = _score_eval_numpy(
-                expr, idfs, present, tf_norm, np
+                expr, idfs, present, tf_norm(udls, avgdl), np
             )
             if ex_ids is not None and len(ex_ids):
                 a = rid * width
@@ -405,9 +415,7 @@ def make_batch_range_eval(
                 pres_by_lookup[lookup] = got
                 return got
 
-            tf_norm = (K1 + 1.0) / (
-                1.0 + K1 * ((1.0 - B) + B * (udls.astype(np.float64) / avgdl))
-            )
+            tfn = tf_norm(udls, avgdl)
             excl_mask = None
             if ex_ids is not None and len(ex_ids):
                 a = rid * width
@@ -438,7 +446,7 @@ def make_batch_range_eval(
                         else zeros_b
                     )
                 score, isnull, ok = _score_eval_numpy(
-                    expr, idfs, present, tf_norm, np
+                    expr, idfs, present, tfn, np
                 )
                 if excl_mask is not None:
                     ok = ok & excl_mask

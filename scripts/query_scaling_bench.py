@@ -89,8 +89,8 @@ spark = bench.build_spark(cpus)
 spark.sparkContext.setLogLevel("ERROR")
 eng = SearchEngine(spark, {index_dir!r})
 
-# warm pass (unmeasured): fills per-term WAND metadata, bootstrap blocks,
-# repair bundles, and first-touch codegen — the service's steady state
+# warm pass (unmeasured): fills term dfs, winner metadata, repair bundles,
+# and first-touch codegen — the service's steady state
 for _qid, qtext, k in REFERENCE_QUERIES:
     eng.search(qtext, k=k).collect()
 

@@ -102,6 +102,17 @@ def test_decode_blocks_keep_all_equals_decode_postings(p):
     assert got_dls.tolist() == dls.tolist()
 
 
+def test_encode_block_metadata():
+    ids = np.arange(0, 300, dtype=np.int64)
+    dls = np.concatenate(
+        [np.full(128, 50), np.full(128, 10), np.full(44, 99)]
+    )
+    _, _, last, min_dl, doff, loff = encode_postings(ids, dls, block=128)
+    assert last.tolist() == [127, 255, 299]
+    assert min_dl.tolist() == [50, 10, 99]
+    assert doff[0] == 0 and loff[0] == 0
+
+
 class TestXXH64Vec:
     def test_vec_matches_scalar_all_lengths(self):
         import random
@@ -304,10 +315,11 @@ class TestChunkedFlushEquivalence:
             assert cb[3] == bb[3] and cb[4] == bb[4], k
             assert cb[5][-1] == bb[5][-1], k
 
-    def test_chunked_wand_block_decode(self):
-        """Block-max metadata from the chunked flush must satisfy the
-        WAND decoder's contract: decoding any subset of blocks via the
-        byte offsets yields exactly those blocks' postings."""
+    def test_chunked_block_subset_decode(self):
+        """Block metadata from the chunked flush must satisfy
+        decode_blocks' contract (the doc-range path's decoder): decoding
+        any subset of blocks via the byte offsets yields exactly those
+        blocks' postings."""
         import numpy as np
 
         from probe_spark.index.codec import decode_blocks, decode_postings
@@ -378,7 +390,7 @@ def test_leading_varint_shift_offsets_whole_segment(p, off):
     np.testing.assert_array_equal(got_ids, ids + off)
     np.testing.assert_array_equal(got_dls, dls)
 
-    # per-block decode (the WAND path) over the shifted stream: every
+    # per-block decode (the doc-range path) over the shifted stream: every
     # block subset must reproduce its shifted ids
     nb = len(bl)
     keep = list(range(nb))

@@ -19,7 +19,7 @@ from __future__ import annotations
 import math
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from probe_spark.fixtures import transcripts_df, transcripts_rows
@@ -103,6 +103,9 @@ def test_local_random_queries_match_oracle(prop_searcher, prop_texts, query):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(query=query_strings())
+# right-nested and balanced ORs: the dense path must add in AST order
+@example(query="error OR (handler OR whitelist)")
+@example(query="(error OR handler) OR (database OR cache)")
 def test_dense_disjunction_on_off_identical(prop_searcher, query, monkeypatch):
     from probe_spark.search.local import LocalSearcher
 

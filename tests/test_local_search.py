@@ -72,6 +72,13 @@ def test_local_matches_oracle(local_searcher, qid, query, k):
         assert abs(g["score"] - w.score) < 1e-9, query
 
 
+def test_k_zero_returns_empty(local_searcher, dist_engine):
+    # dense-eligible pure OR, a generic-path shape, and the engine
+    for q in ("error OR handler", "error AND handler"):
+        assert local_searcher.search(q, k=0) == [], q
+        assert dist_engine.search(q, k=0).collect() == [], q
+
+
 def test_local_garbage_and_empty(local_searcher):
     assert local_searcher.search("zzzqqq") == []
     assert local_searcher.search("the and of") == []

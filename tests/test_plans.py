@@ -9,7 +9,8 @@ same code is viable at 100 TB:
     the corpus)
   * brute-force cosine: no Python eval node in the plan (codegen only) and
     TakeOrderedAndProject for the top-k (no global sort)
-  * single-term pruned search: no shuffle exchange at all
+  * pure-OR top-k (single term included): the doc-range plan, ONE
+    exchange of compressed segments and no per-posting groupBy
 """
 
 from __future__ import annotations
@@ -75,14 +76,17 @@ class TestTopK:
         rows = res.limit(5).collect()
         assert len(rows) == 5 and all(r["text"] for r in rows)
 
-    def test_single_term_pruned_path_has_no_exchange(self, engine):
-        res = engine.search("error", k=5, with_metadata=False)
+    @pytest.mark.parametrize("q", ["error", "error OR handling"])
+    def test_pure_or_takes_ranged_path(self, engine, q):
+        # single terms and pure disjunctions ride the doc-range plan like
+        # every other top-k boolean shape: one exchange of compressed
+        # segments on range_id, no per-posting groupBy
+        res = engine.search(q, k=5, with_metadata=False)
         plan = _plan(res)
         assert "TakeOrderedAndProject" in plan
-        # scan -> decode -> top-k with no data shuffle (the only Exchange
-        # allowed is the broadcast of the tiny keep-list)
-        assert "Exchange hashpartitioning" not in plan
-        assert "Exchange rangepartitioning" not in plan
+        assert "range_id" in plan
+        assert plan.count("Exchange hashpartitioning") == 1
+        assert "collect_set" not in plan
 
 
 class TestCodegenOnly:
