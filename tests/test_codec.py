@@ -102,17 +102,6 @@ def test_decode_blocks_keep_all_equals_decode_postings(p):
     assert got_dls.tolist() == dls.tolist()
 
 
-def test_encode_block_metadata():
-    ids = np.arange(0, 300, dtype=np.int64)
-    dls = np.concatenate(
-        [np.full(128, 50), np.full(128, 10), np.full(44, 99)]
-    )
-    _, _, last, min_dl, doff, loff = encode_postings(ids, dls, block=128)
-    assert last.tolist() == [127, 255, 299]
-    assert min_dl.tolist() == [50, 10, 99]
-    assert doff[0] == 0 and loff[0] == 0
-
-
 class TestXXH64Vec:
     def test_vec_matches_scalar_all_lengths(self):
         import random

@@ -126,52 +126,6 @@ class TestRankIdentity:
             )
 
 
-class TestMultiBlockRankIdentity:
-    """Pure-OR top-k (single terms included) on an index whose terms span
-    many blocks and segments: the doc-range path must return the same
-    ids in the same order with bit-identical scores as the full groupBy
-    path (prune=False)."""
-
-    @pytest.fixture(scope="class")
-    def multi_block_engine(self, spark, tmp_index_root):
-        from probe_spark.index.build import BuildConfig, IndexBuilder
-        from probe_spark.search.engine import SearchEngine
-
-        path = f"{tmp_index_root}/idx_multi_block"
-        # small blocks + small segments force multi-block, multi-segment terms
-        cfg = BuildConfig(
-            n_buckets=4, max_postings_per_segment=256, block_size=32
-        )
-        IndexBuilder(spark, cfg).build(transcripts_df(spark, 300, 7), path)
-        return SearchEngine(spark, path)
-
-    @pytest.mark.parametrize(
-        "q,k",
-        [
-            ("error", 10),
-            ("error", 25),
-            ("data", 5),
-            ("login OR authentication OR auth", 10),
-            ("cache OR queue OR worker", 15),
-            ("running", 10),
-            ("nonexistentzzz", 10),
-        ],
-    )
-    def test_pure_or_rank_identical_to_full(self, multi_block_engine, q, k):
-        eng = multi_block_engine
-        fast = [
-            (r["doc_id"], r["score"])
-            for r in eng.search(q, k=k, with_metadata=False).collect()
-        ]
-        full = [
-            (r["doc_id"], r["score"])
-            for r in eng.search(
-                q, k=k, with_metadata=False, prune=False
-            ).collect()
-        ]
-        assert fast == full
-
-
 class TestDeterminism:
     def test_same_query_stable(self, engine):
         a = engine.search("error AND handling", k=10, with_metadata=False).collect()

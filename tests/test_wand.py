@@ -1,6 +1,10 @@
-"""Block-max WAND: codec block slicing, sweep soundness, and exactness of
-the pruned top-k against the full path on the live engine (SURVEY.md §2.6:
-rank-identity validated against naive full scoring)."""
+"""Pruned top-k: codec block slicing and exactness of the pruned top-k
+against the full path on the live engine (SURVEY.md §2.6: rank-identity
+validated against naive full scoring).
+
+The module keeps its name from the block-max WAND route; pure-OR top-k
+queries (single terms included) now take the doc-range path, which reads
+the same per-block codec metadata."""
 
 from __future__ import annotations
 
@@ -8,7 +12,6 @@ import numpy as np
 import pytest
 
 from probe_spark.index.codec import decode_blocks, decode_postings, encode_postings
-from probe_spark.search import wand
 
 
 class TestCodecBlocks:
@@ -47,132 +50,20 @@ class TestCodecBlocks:
         assert doff[0] == 0 and loff[0] == 0
 
 
-class TestSweep:
-    def _refs(self):
-        # term a: two blocks [0,99] ub=2.0, [100,199] ub=1.0
-        # term b: one block [50,149] ub=0.5
-        return [
-            wand.BlockRef("a", 0, 0, 0, 0, 0, 99, 2.0),
-            wand.BlockRef("a", 0, 0, 0, 1, 100, 199, 1.0),
-            wand.BlockRef("b", 0, 0, 50, 0, 50, 149, 0.5),
-        ]
-
-    def test_bound_sums_overlaps(self):
-        keep, stats = wand.select_blocks(self._refs(), theta=2.4)
-        # bound peaks at 2.5 on [50,99]: blocks a0 and b0 survive, a1 (max
-        # bound 1.5 on [100,149]) is pruned
-        assert keep == {("a", 0, 0, 0): [0], ("b", 0, 0, 50): [0]}
-        assert stats["blocks_kept"] == 2
-
-    def test_theta_zero_keeps_all(self):
-        keep, stats = wand.select_blocks(self._refs(), theta=0.0)
-        assert stats["blocks_kept"] == 3
-
-    def test_high_theta_prunes_all(self):
-        keep, _ = wand.select_blocks(self._refs(), theta=10.0)
-        assert keep == {}
-
-
-class TestColumnarSelect:
-    """select_blocks_columnar: the vectorized driver path — exact for a
-    single term, a SUPERSET of the event sweep for multi-term (safety:
-    keeping extra blocks never changes results, only decode volume)."""
-
-    def _tables(self, avgdl=10.0):
-        # term a: blocks [0,99] min_dl 5, [100,199] min_dl 40
-        # term b: block [50,149] min_dl 80
-        ma = wand.SegmentMeta(
-            "a", 0, 0, 0, 199,
-            np.array([99, 199], dtype=np.int64),
-            np.array([5, 40], dtype=np.int32),
-        )
-        mb = wand.SegmentMeta(
-            "b", 0, 0, 50, 149,
-            np.array([149], dtype=np.int64),
-            np.array([80], dtype=np.int32),
-        )
-        return {"a": wand.term_block_table([ma]),
-                "b": wand.term_block_table([mb])}
-
-    def test_table_shape(self):
-        tab = self._tables()["a"]
-        assert tab["start"].tolist() == [0, 100]
-        assert tab["last"].tolist() == [99, 199]
-        assert tab["block"].tolist() == [0, 1]
-        assert tab["seg_min_doc"].tolist() == [0, 0]
-
-    def test_single_term_matches_sweep_exactly(self):
-        idfs = {"a": 1.0}
-        avgdl = 10.0
-        tabs = {"a": self._tables()["a"]}
-        ub = 1.0 * wand.c_factor(tabs["a"]["min_dl"], avgdl)
-        theta = float((ub[0] + ub[1]) / 2)  # between the two block ubs
-        masks, stats = wand.select_blocks_columnar(tabs, idfs, avgdl, theta)
-        assert masks["a"].tolist() == [True, False]
-        # reference: the event sweep keeps the same single-term set
-        refs = [
-            wand.BlockRef("a", 0, 0, 0, 0, 0, 99, float(ub[0])),
-            wand.BlockRef("a", 0, 0, 0, 1, 100, 199, float(ub[1])),
-        ]
-        keep, sweep_stats = wand.select_blocks(refs, theta)
-        assert keep == {("a", 0, 0, 0): [0]}
-        assert stats["blocks_kept"] == sweep_stats["blocks_kept"] == 1
-
-    def test_multi_term_is_superset_of_sweep(self):
-        idfs = {"a": 1.0, "b": 1.0}
-        avgdl = 10.0
-        tabs = self._tables()
-        ua = 1.0 * wand.c_factor(tabs["a"]["min_dl"], avgdl)
-        ub_ = 1.0 * wand.c_factor(tabs["b"]["min_dl"], avgdl)
-        refs = [
-            wand.BlockRef("a", 0, 0, 0, 0, 0, 99, float(ua[0])),
-            wand.BlockRef("a", 0, 0, 0, 1, 100, 199, float(ua[1])),
-            wand.BlockRef("b", 0, 0, 50, 0, 50, 149, float(ub_[0])),
-        ]
-        for theta in (0.0, 0.5, 1.0, 1.5, 2.0, 5.0):
-            masks, _ = wand.select_blocks_columnar(tabs, idfs, avgdl, theta)
-            keep, _ = wand.select_blocks(refs, theta)
-            swept = {
-                (t, s, q, m, blk)
-                for (t, s, q, m), blocks in keep.items()
-                for blk in blocks
-            }
-            columnar = {
-                (t, int(tabs[t]["salt"][i]), int(tabs[t]["seg_seq"][i]),
-                 int(tabs[t]["seg_min_doc"][i]), int(tabs[t]["block"][i]))
-                for t, m in masks.items()
-                for i in np.flatnonzero(m)
-            }
-            assert swept <= columnar, theta
-
-    def test_zero_idf_term_contributes_nothing(self):
-        masks, stats = wand.select_blocks_columnar(
-            self._tables(), {"a": 1.0, "b": 0.0}, 10.0, 0.0
-        )
-        assert "b" not in masks and stats["blocks_total"] == 2
-
-    def test_partial_theta_is_kth(self):
-        decoded = [
-            ("a", np.array([1, 2, 3]), np.array([10, 10, 10])),
-            ("b", np.array([2, 9]), np.array([10, 10])),
-        ]
-        idfs = {"a": 1.0, "b": 1.0}
-        th2 = wand.partial_theta(decoded, idfs, avgdl=10.0, k=2)
-        c = wand.c_factor(10, 10.0)
-        # doc2 scores 2c, docs 1,3,9 score c -> 2nd best = c
-        assert th2 == pytest.approx(float(c))
-        assert wand.partial_theta(decoded, idfs, 10.0, k=5) == 0.0
-
-
 @pytest.mark.usefixtures("spark")
 class TestPrunedExactness:
+    """Pure-OR top-k (single terms included) on an index whose terms span
+    many blocks and segments: the doc-range path must return the same
+    ids in the same order with bit-identical scores as the full groupBy
+    path (prune=False)."""
+
     @pytest.fixture(scope="class")
     def engine(self, spark, tmp_path_factory):
         from probe_spark.fixtures import transcripts_df
         from probe_spark.index.build import BuildConfig, IndexBuilder
         from probe_spark.search.engine import SearchEngine
 
-        path = str(tmp_path_factory.mktemp("wand") / "idx")
+        path = str(tmp_path_factory.mktemp("pruned") / "idx")
         df = transcripts_df(spark, 300, 7)
         # small blocks + small segments force multi-block, multi-segment terms
         cfg = BuildConfig(
@@ -195,25 +86,19 @@ class TestPrunedExactness:
     )
     def test_rank_identical_to_full(self, engine, q, k):
         pruned = [
-            (r["doc_id"], round(r["score"], 9))
+            (r["doc_id"], r["score"])
             for r in engine.search(q, k=k, with_metadata=False).collect()
         ]
         full = [
-            (r["doc_id"], round(r["score"], 9))
+            (r["doc_id"], r["score"])
             for r in engine.search(
                 q, k=k, with_metadata=False, prune=False
             ).collect()
         ]
         assert pruned == full
 
-    def test_pruning_actually_prunes(self, engine):
-        engine.search("error", k=3, with_metadata=False).collect()
-        st = engine.last_wand_stats
-        assert st["blocks_kept"] < st["blocks_total"]
-        assert st["theta"] > 0
-
     def test_ineligible_queries_fall_back(self, engine):
-        # AND query: not wand-eligible; both paths must agree trivially
+        # AND query: not a pure disjunction; both paths must agree
         a = [
             r["doc_id"]
             for r in engine.search(
